@@ -1160,8 +1160,11 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  files may hold a matching row. Gates:
    *   - at least one merge key must carry zone stats of a type whose
    *     rendering orders correctly under [[mayMatch]] (numerics compare as
-   *     BigDecimal; strings/dates lexicographically — timestamps are
+   *     BigDecimal; strings/dates in UTF8String byte order — timestamps are
    *     excluded, their trimmed-fraction rendering does not);
+   *   - a key whose source dtype differs from the target's never prunes:
+   *     the join matches it under type coercion ('07' = 7), an order the
+   *     target-dtype zone maps do not model;
    *   - the table must be big enough that one bounds aggregation over the
    *     source beats a blind full rewrite
    *     (`spark.graft.merge.pruneMinBytes`, default 64 MB — derived from
@@ -1178,7 +1181,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       case _ => false
     }
     val statKeys = keys.filter(k => m.statsCols.contains(k) &&
-      prunable(m.schema(k).dataType))
+      prunable(m.schema(k).dataType) &&
+      src.schema(k).dataType == m.schema(k).dataType)
     if (statKeys.isEmpty) return None
     val totalBytes = m.entries.iterator.flatMap(e =>
       listParquet(Paths.get(root, e.dir))).map(Files.size(_)).sum
@@ -1204,17 +1208,11 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   }
 
   /** Can a file with zone map `mm` contain a row satisfying `pr`? Missing
-   *  stats keep the file; comparisons are numeric for numeric columns and
-   *  lexicographic otherwise (Spark's fixed-width timestamp/date renderings
-   *  order correctly as strings). Unparseable values never prune. */
+   *  stats keep the file; bounds compare under [[LakeTable.zoneOrder]]. */
   private def mayMatch(mm: Map[String, (String, String)], pr: ZonePred,
       schema: StructType): Boolean =
     mm.get(pr.col).forall { case (mn, mx) =>
-      val numeric = schema(pr.col).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-      def cmp(a: String, b: String): Int =
-        if (!numeric) a.compareTo(b)
-        else try { BigDecimal(a).compare(BigDecimal(b)) }
-        catch { case _: NumberFormatException => 0 } // can't prove → keep
+      val cmp = LakeTable.zoneOrder(schema(pr.col).dataType)
       val aboveMax = pr.lo.exists(l => cmp(l, mx) > 0)
       val belowMin = pr.hi.exists(h => cmp(h, mn) < 0)
       !aboveMax && !belowMin
@@ -1227,7 +1225,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   // generated expressions) speaks LOGICAL names. These helpers are the ONLY
   // translation points: file reads force the physical schema and rename to
   // logical immediately; file writes rename to physical just before
-  // `.write.parquet`. Per-file artifacts (zone stats, bloom sidecars, Hive
+  // [[writeFiles]]. Per-file artifacts (zone stats, bloom sidecars, Hive
   // partition dirs) describe physical files and stay keyed physical, so a
   // rename can never invalidate them. Empty colMap ⇒ every helper is the
   // identity.
@@ -1728,52 +1726,16 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       }
     }
 
-  /** `colMap` is the table's column mapping: `df`, `pcol`, `statsCols` and
-   *  `bloomCols` arrive in LOGICAL names; files, Hive dirs, stats keys and
-   *  bloom sidecars are written PHYSICAL (see the translation-boundary
-   *  notes above). */
-  /** Data-file writes use INT64 TIMESTAMP(MICROS) instead of Spark's
-   *  legacy INT96 default: INT96 is deprecated upstream and its footer
-   *  statistics are unordered bytes, so zone maps for timestamp columns
-   *  would need a read-back aggregation pass. Scoped set-and-restore —
-   *  the session's own writes outside the lake keep their configured
-   *  encoding. A concurrent restore race only re-encodes a file as INT96,
-   *  whose absent footer stats never prune (safe degradation). */
-  private def withMicrosTimestamps[A](f: => A): A = {
-    val k = "spark.sql.parquet.outputTimestampType"
-    // REFCOUNTED per session: concurrent lake writes (CONCURRENT pipeline
-    // flows, parallel fixture builds) overlap — a naive save/restore pair
-    // races, captures a sibling's override as "previous" and leaks
-    // TIMESTAMP_MICROS into the session for good. First writer in saves,
-    // last writer out restores.
-    // Acquire/release run inside ConcurrentHashMap.compute so the entry
-    // can be REMOVED when the last writer leaves — a session-churning app
-    // no longer accumulates one entry per SparkSession it ever wrote
-    // with. (A remove outside the map's per-key lock would race a fresh
-    // computeIfAbsent into a second state object owning its own
-    // save/restore.)
-    LakeTable.microsOverride.compute(spark, (_, st0) => {
-      val st = if (st0 == null) new LakeTable.MicrosState else st0
-      if (st.depth == 0) {
-        st.prev = spark.conf.getOption(k)
-        spark.conf.set(k, "TIMESTAMP_MICROS")
-      }
-      st.depth += 1
-      st
-    })
-    try f finally {
-      LakeTable.microsOverride.compute(spark, (_, st) => {
-        st.depth -= 1
-        if (st.depth == 0) {
-          st.prev match {
-            case Some(v) => spark.conf.set(k, v)
-            case None => spark.conf.unset(k)
-          }
-          null // drop the entry
-        } else st
-      })
-      ()
-    }
+  /** The ONE distributed file writer of the lake: data files, change
+   *  images, deletion vectors and rewrites all land through it, encoded by
+   *  [[MicrosParquetFormat]] (INT64 TIMESTAMP(MICROS), pinned per write job
+   *  — the session's parquet conf is never modified). `files` coalesces
+   *  the output to that many tasks. */
+  private def writeFiles(df: DataFrame, dir: String,
+      partitionBy: Option[String] = None, files: Option[Int] = None): Unit = {
+    val w = files.fold(df)(df.coalesce).write
+      .format(classOf[MicrosParquetFormat].getName)
+    partitionBy.fold(w)(w.partitionBy(_)).save(s"$root/$dir")
   }
 
   /** Driver-local parquet write of a SMALL in-memory relation: a frame
@@ -1784,7 +1746,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  in driver memory (guide §5: the scheduler round-trip IS the cost for
    *  metadata-sized writes). Encodings match the distributed writer
    *  exactly: INT64 TIMESTAMP(MICROS) — InternalRow's own representation,
-   *  the same encoding [[withMicrosTimestamps]] pins — DATE int32, STRING
+   *  the same encoding [[writeFiles]] pins — DATE int32, STRING
    *  binary, snappy compression, footer stats recorded, so zone maps and
    *  the change feed read these files like any other. Any other plan
    *  shape, row count, or type falls back (returns false). */
@@ -1855,6 +1817,10 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     }
   }
 
+  /** `colMap` is the table's column mapping: `df`, `pcol`, `statsCols` and
+   *  `bloomCols` arrive in LOGICAL names; files, Hive dirs, stats keys and
+   *  bloom sidecars are written PHYSICAL (see the translation-boundary
+   *  notes above). */
   private def writeData(df0: DataFrame, pcol: Option[String],
       statsCols: Seq[String] = Nil,
       preclustered: Boolean = false,
@@ -1866,8 +1832,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val dir = s"data/${UUID.randomUUID()}"
     val owned = pcol.map(pn) match {
       case None =>
-        if (!writeLocalRelation(df, dir))
-          withMicrosTimestamps { df.write.parquet(s"$root/$dir") }
+        if (!writeLocalRelation(df, dir)) writeFiles(df, dir)
         None
       case Some(p) =>
         // Cluster by the partition column first: otherwise every task writes
@@ -1878,7 +1843,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         // `preclustered` callers (Z-order compaction) arranged their own
         // task layout — re-shuffling here would destroy it.
         val out = if (preclustered) df else df.repartition(col(p))
-        withMicrosTimestamps { out.write.partitionBy(p).parquet(s"$root/$dir") }
+        writeFiles(out, dir, Some(p))
         // Owned partition values from the written directory layout (p=value
         // subdirs) — a driver-side listing instead of a second full
         // evaluation of `df` (which may be an expensive join/window plan;
@@ -1929,8 +1894,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       .withColumn(side, lit("d"))
       .unionByName(changes.withColumn(side, lit("c")))
     val tmp = s"data/.mc-${UUID.randomUUID()}"
-    withMicrosTimestamps {
-      unioned.write.partitionBy(side).parquet(s"$root/$tmp") }
+    writeFiles(unioned, tmp, Some(side))
     val dir = s"data/${UUID.randomUUID()}"
     val ch = s"_changes/${UUID.randomUUID()}"
     def place(sideVal: String, dst: Path): Unit = {
@@ -1944,6 +1908,71 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     deleteRecursively(Paths.get(root, tmp))
     writeBloomIndex(dir, df.schema, None, bloomCols.map(pn))
     (dir, collectFileStats(dir, df.schema, None, statsCols.map(pn)), ch)
+  }
+
+  /** Materialize a commit's change rows (logical names, `_change_type`
+   *  included) under `_changes/`; returns the dir the manifest references
+   *  (orphaned by a lost race → cleaned by vacuum). */
+  private def writeChangeImages(m: Manifest, changes: DataFrame): String = {
+    val d = s"_changes/${UUID.randomUUID()}"
+    writeFiles(toPhysicalNames(m, changes), d)
+    d
+  }
+
+  /** Write the row coordinates of `matches` (a frame carrying the row-id
+   *  columns) as a deletion vector under `_dv/`. Returns the dir and its
+   *  row count, read from the written files' FOOTERS — a read-back count
+   *  would be one more Spark job for a number parquet already records. */
+  private def writeDeletionVector(matches: DataFrame): (String, Long) = {
+    val dvDir = s"_dv/${UUID.randomUUID()}"
+    writeFiles(matches.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos")), dvDir)
+    (dvDir, parquetRowCount(Paths.get(root, dvDir)).getOrElse(
+      spark.read.schema(DvSchema).parquet(s"$root/$dvDir").count()))
+  }
+
+  /** Hard-link every file of entry `e` except `touched` (root-relative)
+   *  into a fresh data dir — zero data I/O, partition subpaths kept so
+   *  basePath reads still recover the pcol. Returns the dir and the linked
+   *  files' zone maps (unchanged, re-pathed). */
+  private def relinkExcept(m: Manifest, e: DirEntry,
+      touched: Seq[String]): (String, Seq[FileStat]) = {
+    val newDir = s"data/${UUID.randomUUID()}"
+    Files.createDirectories(Paths.get(root, newDir))
+    val touchedSet = touched.toSet
+    val stats = listParquet(Paths.get(root, e.dir))
+      .map(p => Paths.get(root).relativize(p).toString)
+      .filterNot(touchedSet).flatMap { f =>
+        val rel = Paths.get(e.dir).relativize(Paths.get(f))
+        val dst = Paths.get(root, newDir).resolve(rel)
+        Files.createDirectories(dst.getParent)
+        Files.createLink(dst, Paths.get(root, f))
+        m.fileStats.find(_.path == f).map(_.copy(path = s"$newDir/$rel"))
+      }
+    (newDir, stats)
+  }
+
+  /** Copy-on-write rewrite into `newDir`, which already holds hard links
+   *  to the files the rewrite keeps: `df` (logical names) is written to a
+   *  tmp dir — one file per partition value on a partitioned table, else
+   *  `files` files — its files are hard-linked into `newDir` and their
+   *  zone maps read. Returns (files written, their stats). */
+  private def rewriteInto(m: Manifest, df: DataFrame, newDir: String,
+      files: Option[Int] = None): (Int, Seq[FileStat]) = {
+    val tmp = s"data/.rw-${UUID.randomUUID()}"
+    val pc = m.pcol.map(physName(m, _))
+    val dfP = toPhysicalNames(m, df)
+    pc match {
+      case Some(p) => writeFiles(dfP.repartition(col(p)), tmp, Some(p))
+      case None => writeFiles(dfP, tmp, files = files)
+    }
+    val linked = listParquet(Paths.get(root, tmp)).map { src =>
+      val dst = Paths.get(root, newDir).resolve(Paths.get(root, tmp).relativize(src))
+      Files.createDirectories(dst.getParent)
+      Files.createLink(dst, src)
+    }
+    deleteRecursively(Paths.get(root, tmp))
+    (linked.size, collectFileStats(newDir, physSchema(m), pc,
+      m.statsCols.map(physName(m, _)), Some(linked)))
   }
 
   // ---- BLOOM-FILTER FILE INDEX (Delta bloom filter index analog) ----------
@@ -2086,20 +2115,22 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     finally stream.close()
   }
 
-  /** Per-file zone maps for the freshly written `dir`: one aggregation pass
-   *  over the NEW data only (grouped by `input_file_name`), min/max rendered
-   *  through CAST-to-STRING so the manifest encoding is engine-portable.
-   *  Driver-side result is one row per written file — bounded like the
-   *  partition-value manifests. */
+  /** Per-file zone maps for the freshly written `files` under `dir` (every
+   *  file of `dir` by default): read from their footers, or — if a footer
+   *  has an unexpected shape — one aggregation pass over just those files
+   *  (grouped by `input_file_name`), min/max rendered through
+   *  CAST-to-STRING so the manifest encoding is engine-portable. */
   private def collectFileStats(dir: String, schema: StructType,
-      pcol: Option[String], statsCols: Seq[String]): Seq[FileStat] = {
+      pcol: Option[String], statsCols: Seq[String],
+      files: Option[Seq[Path]] = None): Seq[FileStat] = {
     if (statsCols.isEmpty) Nil
     else {
-      val files = listParquet(Paths.get(root, dir))
-        .map(p => p -> Paths.get(root).relativize(p).toString)
-      footerStats(files, schema, pcol, statsCols).getOrElse(statsOf(
-        spark.read.schema(schema).option("basePath", s"$root/$dir").parquet(s"$root/$dir"),
-        dir, schema, pcol, statsCols))
+      val fs = files.getOrElse(listParquet(Paths.get(root, dir)))
+      footerStats(fs.map(p => p -> Paths.get(root).relativize(p).toString),
+        schema, pcol, statsCols).getOrElse(statsOf(
+          spark.read.schema(schema).option("basePath", s"$root/$dir")
+            .parquet(fs.map(_.toString): _*),
+          dir, schema, pcol, statsCols))
     }
   }
 
@@ -3047,17 +3078,6 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         .filter(col("__ch").isNotNull)
         .select((cols :+ ChangeTypeCol).map(c => col(s"__ch.$c").as(c)): _*)
     }
-    /** Materialize the commit's change rows under `_changes/` (referenced by
-     *  the manifest; orphaned by a lost race → cleaned by vacuum). */
-    def writeChanges(changes: DataFrame): Option[String] = {
-      if (!m.cdfEnabled) None
-      else {
-        val d = s"_changes/${UUID.randomUUID()}"
-        toPhysicalNames(m, changes).write.parquet(s"$root/$d")
-        Some(d)
-      }
-    }
-
     // fast path: merging into a table with no data dirs inserts everything —
     // skip the full-outer join against an empty side (bootstrap merges are
     // common: every CDC flow's first batch lands here)
@@ -3132,22 +3152,10 @@ final class LakeTable private (val spark: SparkSession, val root: String,
             newEntries += e
             newStats ++= m.fileStats.filter(_.path.startsWith(e.dir + "/"))
           } else {
-            // hard-link the untouched files into a fresh dir (zero data
-            // I/O), dropping the rewritten ones — the mutateWhere pattern
-            val newDir = s"data/${UUID.randomUUID()}"
-            Files.createDirectories(Paths.get(root, newDir))
-            val touchedSet = touchedInDir.toSet
-            val all = listParquet(Paths.get(root, e.dir))
-              .map(p => Paths.get(root).relativize(p).toString)
-            all.filterNot(touchedSet).foreach { f =>
-              val rel = Paths.get(e.dir).relativize(Paths.get(f))
-              val dst = Paths.get(root, newDir).resolve(rel)
-              Files.createDirectories(dst.getParent)
-              Files.createLink(dst, Paths.get(root, f))
-              m.fileStats.find(_.path == f).foreach { fs =>
-                newStats += fs.copy(path = s"$newDir/$rel")
-              }
-            }
+            // the untouched files move to a fresh dir by hard link; the
+            // rewritten ones are dropped
+            val (newDir, kept) = relinkExcept(m, e, touchedInDir)
+            newStats ++= kept
             newEntries += DirEntry(newDir, e.owned, clustered = e.clustered)
           }
         }
@@ -3196,7 +3204,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
           if (m.cdfEnabled) joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           else joined
         try {
-          val chDir = writeChanges(changesFrom(pinned))
+          val chDir = Option.when(m.cdfEnabled)(
+            writeChangeImages(m, changesFrom(pinned)))
           val merged = mergedFrom(pinned)
           // SET * writes source rows (validated above); column-level
           // clauses synthesize new rows — gate them before anything lands
@@ -3223,7 +3232,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
           // same overlap as the unpartitioned arm: images ride their own
           // thread while the merged partitions are written
           val chDirF =
-            if (m.cdfEnabled) inParallel { writeChanges(changesFrom(pinned)) }
+            if (m.cdfEnabled) inParallel {
+              Some(writeChangeImages(m, changesFrom(pinned))) }
             else () => Option.empty[String]
           val merged = mergedFrom(pinned)
           if (matchedSet.nonEmpty || insertSet.nonEmpty)
@@ -3412,25 +3422,15 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val matches = live.filter(cond)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val dvDir = s"_dv/${UUID.randomUUID()}"
       // the delete images and the DV coordinates are independent projections
       // of the pinned matches: write the images on their own thread so the
       // two jobs overlap (both dirs are vacuumable orphans if either fails)
       val chDirF: () => Option[String] =
         if (m.cdfEnabled) inParallel {
-          val d = s"_changes/${UUID.randomUUID()}"
-          toPhysicalNames(m, matches.select(m.schema.fieldNames.map(col).toSeq: _*)
-            .withColumn(ChangeTypeCol, lit("delete")))
-            .write.parquet(s"$root/$d")
-          Some(d)
+          Some(writeChangeImages(m, matches.select(m.schema.fieldNames.map(col).toSeq: _*)
+            .withColumn(ChangeTypeCol, lit("delete"))))
         } else () => None
-      matches.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-        .write.parquet(s"$root/$dvDir")
-      // count the coordinates from the written files' FOOTERS — the old
-      // read-back count was one more Spark job per delete for a number
-      // the parquet metadata already records exactly
-      val matched = parquetRowCount(Paths.get(root, dvDir)).getOrElse(
-        spark.read.schema(DvSchema).parquet(s"$root/$dvDir").count())
+      val (dvDir, matched) = writeDeletionVector(matches)
       if (matched == 0) {
         deleteRecursively(Paths.get(root, dvDir))
         chDirF().foreach(d => deleteRecursively(Paths.get(root, d)))
@@ -3484,28 +3484,19 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       val matches = readScopedRows(m, None, withRowIds = true).filter(cond)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val dvDir = s"_dv/${UUID.randomUUID()}"
         // three independent consumers of the two pinned frames — DV
         // coordinates, change images, new data — overlap all three writes
         val chDirF: () => Option[String] =
           if (m.cdfEnabled) inParallel {
-            val d = s"_changes/${UUID.randomUUID()}"
-            toPhysicalNames(m, matches.select(cols.map(col): _*)
+            Some(writeChangeImages(m, matches.select(cols.map(col): _*)
               .withColumn(ChangeTypeCol, lit("delete"))
-              .unionByName(data.withColumn(ChangeTypeCol, lit("insert"))))
-              .write.parquet(s"$root/$d")
-            Some(d)
+              .unionByName(data.withColumn(ChangeTypeCol, lit("insert")))))
           } else () => None
-        val dvF = inParallel {
-          matches.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-            .write.parquet(s"$root/$dvDir")
-        }
+        val dvF = inParallel { writeDeletionVector(matches) }
         val (dir, owned, fstats) =
           writeData(data, m.pcol, m.statsCols, bloomCols = m.bloomCols,
             colMap = m.colMap)
-        dvF()
-        val replaced = parquetRowCount(Paths.get(root, dvDir)).getOrElse(
-          spark.read.schema(DvSchema).parquet(s"$root/$dvDir").count())
+        val (dvDir, replaced) = dvF()
         val chDir = chDirF()
         if (!tryCommit(m.copy(op = "replace", cdfDir = chDir, commitTsMs = None,
             entries = m.entries :+ DirEntry(dir, owned),
@@ -3563,11 +3554,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         val (dir, owned, fstats) =
           writeData(data, m.pcol, m.statsCols, bloomCols = m.bloomCols,
             colMap = m.colMap)
-        val numeric = dt.isInstanceOf[org.apache.spark.sql.types.NumericType]
-        def cmp(a: String, b: String): Int =
-          if (!numeric) a.compareTo(b)
-          else try BigDecimal(a).compare(BigDecimal(b))
-          catch { case _: NumberFormatException => 0 }
+        val cmp = LakeTable.zoneOrder(dt)
         def replaced(v: String): Boolean = preds.forall(pr =>
           pr.lo.forall(l => cmp(v, l) >= 0) && pr.hi.forall(h => cmp(v, h) <= 0))
         val keptEntries = m.entries.flatMap { e =>
@@ -3584,13 +3571,10 @@ final class LakeTable private (val spark: SparkSession, val root: String,
             // relaxes to O(replaced region) exactly when CDF demands it)
             val scope = m.entries.flatMap(_.owned.getOrElse(Nil))
               .distinct.filter(replaced).toSet
-            val d = s"_changes/${UUID.randomUUID()}"
-            toPhysicalNames(m, readScoped(m, Some(scope))
+            Some(writeChangeImages(m, readScoped(m, Some(scope))
               .select(cols.map(col): _*)
               .withColumn(ChangeTypeCol, lit("delete"))
-              .unionByName(data.withColumn(ChangeTypeCol, lit("insert"))))
-              .write.parquet(s"$root/$d")
-            Some(d)
+              .unionByName(data.withColumn(ChangeTypeCol, lit("insert")))))
           } else None
         if (!tryCommit(Manifest(m.schema, m.pcol,
             keptEntries :+ DirEntry(dir, owned), "replace", m.cdfEnabled, chDir,
@@ -3653,22 +3637,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         newEntries += e
         newStats ++= m.fileStats.filter(_.path.startsWith(e.dir + "/"))
       } else {
-        val newDir = s"data/${UUID.randomUUID()}"
-        Files.createDirectories(Paths.get(root, newDir))
-        // 1. hard-link every untouched file (zero data I/O), keeping the
-        //    partition subpath so basePath reads still recover the pcol
-        val touchedSet = touched.toSet
-        val all = listParquet(Paths.get(root, e.dir))
-          .map(p => Paths.get(root).relativize(p).toString)
-        all.filterNot(touchedSet).foreach { f =>
-          val rel = Paths.get(e.dir).relativize(Paths.get(f))
-          val dst = Paths.get(root, newDir).resolve(rel)
-          Files.createDirectories(dst.getParent)
-          Files.createLink(dst, Paths.get(root, f))
-          m.fileStats.find(_.path == f).foreach { fs =>
-            newStats += fs.copy(path = s"$newDir/$rel")
-          }
-        }
+        // 1. hard-link every untouched file into a fresh dir
+        val (newDir, kept) = relinkExcept(m, e, touched)
+        newStats ++= kept
         // 2. rewrite the touched files with the mutation applied
         val touchedDf = toLogicalNames(m, spark.read.schema(physSchema(m))
           .option("basePath", s"$root/${e.dir}")
@@ -3699,49 +3670,16 @@ final class LakeTable private (val spark: SparkSession, val root: String,
                 }: _*).withColumn(ChangeTypeCol, lit("update_postimage")))
           })
         }
-        val rwTmp = s"data/.rw-${UUID.randomUUID()}"
-        // preserve partition subdirs for partitioned tables; files are
-        // written under PHYSICAL column names (column-mapping boundary)
-        val rewrittenP = toPhysicalNames(m, rewritten)
-        withMicrosTimestamps { m.pcol.map(physName(m, _)) match {
-          case Some(p) => rewrittenP.repartition(col(p))
-            .write.partitionBy(p).parquet(s"$root/$rwTmp")
-          case None => rewrittenP.write.parquet(s"$root/$rwTmp")
-        } }
-        val rwFiles = listParquet(Paths.get(root, rwTmp))
-        rwFiles.foreach { src =>
-          val rel = Paths.get(root, rwTmp).relativize(src)
-          val dst = Paths.get(root, newDir).resolve(rel)
-          Files.createDirectories(dst.getParent)
-          Files.createLink(dst, src)
-        }
-        // stats for just the rewritten files (linked files kept theirs)
-        val rwRel = rwFiles.map(src =>
-          s"$newDir/${Paths.get(root, rwTmp).relativize(src)}")
-        if (m.statsCols.nonEmpty && rwRel.nonEmpty) {
-          // footers of the freshly rewritten files (read via the rwTmp
-          // paths — same inodes as the hard links under newDir)
-          newStats ++= footerStats(rwFiles.zip(rwRel), physSchema(m),
-            m.pcol.map(physName(m, _)), m.statsCols.map(physName(m, _)))
-            .getOrElse {
-              val rwDf = spark.read.schema(physSchema(m))
-                .option("basePath", s"$root/$newDir")
-                .parquet(rwRel.map(f => s"$root/$f"): _*)
-              statsOf(rwDf, newDir, physSchema(m),
-                m.pcol.map(physName(m, _)), m.statsCols.map(physName(m, _)))
-            }
-        }
-        deleteRecursively(Paths.get(root, rwTmp))
+        // 3. write the rewrite beside the links (linked files kept their
+        //    stats; partition subdirs are preserved)
+        newStats ++= rewriteInto(m, rewritten, newDir)._2
         newEntries += DirEntry(newDir, e.owned)
       }
     }
     val chDir =
-      if (m.cdfEnabled && changeParts.nonEmpty) {
-        val d = s"_changes/${UUID.randomUUID()}"
-        toPhysicalNames(m, changeParts.reduce(_ unionByName _))
-          .write.parquet(s"$root/$d")
-        Some(d)
-      } else None
+      if (m.cdfEnabled && changeParts.nonEmpty)
+        Some(writeChangeImages(m, changeParts.reduce(_ unionByName _)))
+      else None
     if (!tryCommit(Manifest(m.schema, m.pcol, newEntries.toSeq, opName,
         m.cdfEnabled, chDir, m.statsCols, newStats.toSeq, txns = m.txns,
         droppedCols = m.droppedCols,
@@ -3789,14 +3727,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val matches = readScopedRows(m, None, withRowIds = true).filter(cond)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val dvDir = s"_dv/${UUID.randomUUID()}"
-      matches.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-        .write.parquet(s"$root/$dvDir")
-      // count the coordinates from the written files' FOOTERS — the old
-      // read-back count was one more Spark job per delete for a number
-      // the parquet metadata already records exactly
-      val matched = parquetRowCount(Paths.get(root, dvDir)).getOrElse(
-        spark.read.schema(DvSchema).parquet(s"$root/$dvDir").count())
+      val (dvDir, matched) = writeDeletionVector(matches)
       if (matched == 0) {
         deleteRecursively(Paths.get(root, dvDir))
         return 0L
@@ -3812,12 +3743,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       // data: write them on their own thread, overlapping the data write
       val chDirF: () => Option[String] =
         if (m.cdfEnabled) inParallel {
-          val d = s"_changes/${UUID.randomUUID()}"
-          toPhysicalNames(m, matches.select(cols.map(col): _*)
+          Some(writeChangeImages(m, matches.select(cols.map(col): _*)
             .withColumn(ChangeTypeCol, lit("update_preimage"))
-            .unionByName(updated.withColumn(ChangeTypeCol, lit("update_postimage"))))
-            .write.parquet(s"$root/$d")
-          Some(d)
+            .unionByName(updated.withColumn(ChangeTypeCol, lit("update_postimage")))))
         } else () => None
       val (dir, owned, fstats) =
         writeData(updated, m.pcol, m.statsCols, bloomCols = m.bloomCols,
@@ -4044,39 +3972,11 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         scans.reduce(_ unionByName _), m)
         .select(m.schema.fieldNames.map(col).toSeq: _*))
     }
-    var rewrittenCount = 0
-    rewritten.foreach { df =>
-      val rwTmp = s"data/.opt-${UUID.randomUUID()}"
-      val dfP = toPhysicalNames(m, df)
-      withMicrosTimestamps { m.pcol.map(physName(m, _)) match {
-        case Some(p) => dfP.repartition(col(p))
-          .write.partitionBy(p).parquet(s"$root/$rwTmp")
-        case None =>
-          val n = math.max(1, math.ceil(rewriteBytes.toDouble / targetFileBytes).toInt)
-          dfP.coalesce(n).write.parquet(s"$root/$rwTmp")
-      } }
-      val rwFiles = listParquet(Paths.get(root, rwTmp))
-      rwFiles.foreach { src =>
-        val sub = Paths.get(root, rwTmp).relativize(src)
-        val dst = Paths.get(root, newDir).resolve(sub)
-        Files.createDirectories(dst.getParent)
-        Files.createLink(dst, src)
-      }
-      rewrittenCount = rwFiles.size
-      if (m.statsCols.nonEmpty && rwFiles.nonEmpty) {
-        val rwRel = rwFiles.map(src =>
-          s"$newDir/${Paths.get(root, rwTmp).relativize(src)}")
-        newStats ++= footerStats(rwFiles.zip(rwRel), physSchema(m),
-          m.pcol.map(physName(m, _)), m.statsCols.map(physName(m, _)))
-          .getOrElse {
-            val rwDf = spark.read.schema(physSchema(m))
-              .option("basePath", s"$root/$newDir")
-              .parquet(rwRel.map(f => s"$root/$f"): _*)
-            statsOf(rwDf, newDir, physSchema(m),
-              m.pcol.map(physName(m, _)), m.statsCols.map(physName(m, _)))
-          }
-      }
-      deleteRecursively(Paths.get(root, rwTmp))
+    val n = math.max(1, math.ceil(rewriteBytes.toDouble / targetFileBytes).toInt)
+    val rewrittenCount = rewritten.fold(0) { df =>
+      val (written, stats) = rewriteInto(m, df, newDir, files = Some(n))
+      newStats ++= stats
+      written
     }
     // owned values for the packed dir = the union of what the entries owned
     val owned = m.pcol.map(_ => m.entries.flatMap(_.owned.getOrElse(Nil)).distinct)
@@ -4298,7 +4198,11 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     }
     // one numeric shadow column per z-col for the quantile sketch
     val shadowed = zcols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-      d.withColumn(s"__zc$i", col(c).cast("double"))
+      // ANSI mode rejects CAST(DATE AS DOUBLE): dates bin on their day number
+      val shadow =
+        if (m.schema(c).dataType == org.apache.spark.sql.types.DateType) unix_date(col(c))
+        else col(c)
+      d.withColumn(s"__zc$i", shadow.cast("double"))
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bits = 8
     val bins = 1 << bits
@@ -4388,12 +4292,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     preds.foreach(pr => require(pr.col == p,
       s"OPTIMIZE WHERE must predicate only the partition column $p, " +
         s"got ${pr.col} (Delta's rule — only partition predicates scope files)"))
-    val numeric =
-      m.schema(p).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-    def cmp(a: String, b: String): Int =
-      if (!numeric) a.compareTo(b)
-      else try BigDecimal(a).compare(BigDecimal(b))
-      catch { case _: NumberFormatException => 0 }
+    val cmp = LakeTable.zoneOrder(m.schema(p).dataType)
     def inScope(v: String): Boolean = preds.forall(pr =>
       pr.lo.forall(l => cmp(v, l) >= 0) && pr.hi.forall(h => cmp(v, h) <= 0))
     val scope = m.entries.flatMap(_.owned.getOrElse(Nil)).distinct.filter(inScope)
@@ -4447,12 +4346,21 @@ final class LakeTable private (val spark: SparkSession, val root: String,
 object LakeTable {
   private val T_MARK = "__t_exists"
   private val S_MARK = "__s_exists"
-  private[lake] final class MicrosState {
-    var depth: Int = 0
-    var prev: Option[String] = None
-  }
-  private[lake] val microsOverride =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, MicrosState]()
+  /** Order of two CAST-to-string renderings of a `dt` value, the order
+   *  zone-map bounds, partition values and [[ZonePred]] literals compare
+   *  under: numeric for numeric columns (an unparseable value compares
+   *  equal, so it never prunes), UTF8String byte order otherwise — the
+   *  order parquet footer stats and Spark's min/max use (UTF-16 order
+   *  differs above the BMP). Spark's fixed-width date and timestamp
+   *  renderings order correctly as strings. */
+  private[lake] def zoneOrder(dt: org.apache.spark.sql.types.DataType): (String, String) => Int =
+    dt match {
+      case _: org.apache.spark.sql.types.NumericType => (a, b) =>
+        try BigDecimal(a).compare(BigDecimal(b))
+        catch { case _: NumberFormatException => 0 }
+      case _ => (a, b) => org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+    }
   /** Sentinel cdfDir value: the commit's ADDED DATA dirs are its insert
    *  images (all-insert commits — bootstrap merges). Never a real path. */
   private[lake] val CdfFromData = "__cdf_from_data__"

@@ -3623,15 +3623,13 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       // The signed (group, value) multiset is aggregated ONCE per
       // distinct expression (a MIN and MAX over one column share it).
       val cdeltaUses = scala.collection.mutable.Map.empty[String, Int]
-      val cdeltaOf: String => DataFrame = {
-        val cache = scala.collection.mutable.Map.empty[String, DataFrame]
-        e => {
-          cdeltaUses(e) = cdeltaUses.getOrElse(e, 0) + 1
-          cache.getOrElseUpdate(e, signed.filter(expr(e).isNotNull)
-            .groupBy((gCols :+ expr(e)): _*)
-            .agg(sum(col("__sign")).as("__d"))
-            .toDF((groupBy ++ Seq("__v", "__d")): _*))
-        }
+      val cdeltas = scala.collection.mutable.Map.empty[String, DataFrame]
+      val cdeltaOf: String => DataFrame = e => {
+        cdeltaUses(e) = cdeltaUses.getOrElse(e, 0) + 1
+        cdeltas.getOrElseUpdate(e, signed.filter(expr(e).isNotNull)
+          .groupBy((gCols :+ expr(e)): _*)
+          .agg(sum(col("__sign")).as("__d"))
+          .toDF((groupBy ++ Seq("__v", "__d")): _*))
       }
       val dcountMerges: Seq[() => Unit] = dcounts.zip(distTables).map {
         case ((a, e), dt) =>
@@ -3682,7 +3680,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       // thread reads the first's materialization instead of re-running
       // the window aggregation
       val sharedCdeltas = cdeltaUses.collect {
-        case (e, n) if n > 1 => cdeltaOf(e) }.toSeq
+        case (e, n) if n > 1 => cdeltas(e) }.toSeq
       sharedCdeltas.foreach(_.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       try Pipeline.awaitAll(dcountMerges ++ extMerges)
@@ -4065,8 +4063,9 @@ object Pipeline {
   private[pipeline] final case class ExtremeRefill(mode: String)
     extends Exception(mode)
 
-  /** Run independent bodies concurrently (one thread each, daemon) and
-   *  join them all, rethrowing the first failure. A single body runs
+  /** Run independent bodies concurrently (one thread each, daemon), join
+   *  EVERY body, then rethrow the first failure in list order — no body is
+   *  still writing when the caller sees the failure. A single body runs
    *  inline — no thread for the common one-companion refresh. */
   private[pipeline] def awaitAll(bodies: Seq[() => Unit]): Unit =
     if (bodies.lengthCompare(1) <= 0) bodies.foreach(_.apply())
@@ -4078,9 +4077,10 @@ object Pipeline {
         th.start()
         ft
       }
-      futs.foreach(ft => try { ft.get(); () } catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      val failures = futs.flatMap(ft => try { ft.get(); None } catch {
+        case e: java.util.concurrent.ExecutionException => Some(e.getCause)
       })
+      failures.headOption.foreach(throw _)
     }
 
   /** Table property pinning the SESSION TIMEZONE an expression-group-key

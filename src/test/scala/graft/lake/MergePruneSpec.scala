@@ -150,4 +150,25 @@ class MergePruneSpec extends SparkSpec {
       .map(_.getDouble(1)).toSeq == Seq(50.0))
     assert(t3.read.count() == 3)
   }
+
+  test("a source key of another dtype never prunes: an INT source key 7 " +
+      "updates the STRING target key '07' instead of re-inserting it") {
+    def mk(): LakeTable = {
+      val t = LakeTable(spark, tmpDir("mgp_dtype"))
+      t.create(Seq(("", "")).toDF("id", "tag").schema, statsColumns = Seq("id"))
+      Seq(Seq("05", "07"), Seq("50", "59"), Seq("90", "99")).foreach { ids =>
+        t.append(ids.map(i => (i, "old")).toDF("id", "tag").coalesce(1)) }
+      t
+    }
+    val src = Seq((7, "new")).toDF("id", "tag")
+    val pruned = mk()
+    withPruneThreshold(0L) { pruned.merge(src, Seq("id")) }
+    val full = mk()
+    full.merge(src, Seq("id"))
+    def rows(t: LakeTable) = t.read.select(col("id").cast("string"), col("tag"))
+      .as[(String, String)].collect().toSet
+    assert(rows(pruned) == rows(full))
+    assert(pruned.read.count() == 6, rows(pruned))
+    assert(pruned.read.filter(col("tag") === "new").count() == 1, rows(pruned))
+  }
 }

@@ -249,4 +249,52 @@ class ZoneMapSpec extends SparkSpec {
     assert(skipped >= 6, s"kept=$kept skipped=$skipped")
     assert(t.readWhere(preds).count() == 101)
   }
+
+  test("string zone maps order by UTF-8 bytes: a file holding \"\\uFFFF\" " +
+      "and an emoji is kept for a \"\\uFFFF\" lookup") {
+    val t = LakeTable(spark, tmpDir("zm_utf8"))
+    // UTF-16 order puts U+FFFF above the emoji's surrogate pair; byte
+    // order (footer stats, Spark's min/max) puts it below
+    val emoji = "\uD83D\uDE00"
+    val df = Seq(("\uFFFF", 1L), (emoji, 2L)).toDF("k", "v")
+    t.create(df.schema, statsColumns = Seq("k"))
+    t.append(df.coalesce(1))
+    assert(t.zoneStatsForTest.values.toSeq == Seq(Map("k" -> (("\uFFFF", emoji)))))
+    val preds = Seq(ZonePred.eq("k", "\uFFFF"))
+    assert(t.skippingStats(preds) == ((1, 0)))
+    assert(t.readWhere(preds).select("v").as[Long].collect().toSeq == Seq(1L))
+  }
+
+  test("z-order and liquid clustering on a DATE column: rows read back " +
+      "equal and date ranges prune") {
+    val df = spark.range(0, 4096).select(col("id"),
+      date_add(lit(java.sql.Date.valueOf("2024-01-01")),
+        ((col("id") * 2654435761L) % 730).cast("int")).as("d"))
+    val want = df.as[(Long, java.sql.Date)].collect().toSet
+    val dPred = Seq(ZonePred.between("d", "2024-03-01", "2024-03-31"))
+    def wantIn = df.filter(col("d").between("2024-03-01", "2024-03-31")).count()
+
+    val z = LakeTable(spark, tmpDir("zorder_date"))
+    z.create(df.schema, statsColumns = Seq("d"))
+    z.append(df)
+    z.compactZOrder(Seq("d"), targetFiles = 16)
+    assert(z.read.as[(Long, java.sql.Date)].collect().toSet == want)
+    val (_, zSkipped) = z.skippingStats(dPred)
+    assert(zSkipped >= 12, s"z-order on d should skip most of 16 files, got $zSkipped")
+    assert(z.readWhere(dPred).count() == wantIn)
+
+    val cRoot = tmpDir("cluster_date")
+    val c = LakeTable(spark, cRoot)
+    c.create(df.schema, statsColumns = Seq("d"))
+    c.append(df)
+    val bytes = java.nio.file.Files.walk(java.nio.file.Paths.get(cRoot, "data"))
+      .filter(_.toString.endsWith(".parquet")).mapToLong(java.nio.file.Files.size(_)).sum
+    // ~16 output files
+    assert(c.optimizeClustered(Seq("d"), targetFileBytes = bytes / 16 + 1)
+      .filesRewritten >= 8)
+    assert(c.read.as[(Long, java.sql.Date)].collect().toSet == want)
+    val (cKept, cSkipped) = c.skippingStats(dPred)
+    assert(cSkipped > cKept, s"clustered on d: kept=$cKept skipped=$cSkipped")
+    assert(c.readWhere(dPred).count() == wantIn)
+  }
 }

@@ -92,10 +92,12 @@ class CompanionConcurrencySpec extends SparkSpec {
       Pipeline.awaitAll(Seq(
         () => { ran.incrementAndGet(); () },
         () => throw boom,
-        () => { ran.incrementAndGet(); () }))
+        // finishes well after the failure: awaitAll must join it before
+        // rethrowing
+        () => { Thread.sleep(300); ran.incrementAndGet(); () }))
     }
     assert(thrown eq boom)
-    assert(ran.get() == 2) // independent bodies were not cancelled
+    assert(ran.get() == 2) // every body was joined, none cancelled
     // single body runs inline (no thread)
     val t0 = Thread.currentThread()
     var seen: Thread = null
